@@ -172,12 +172,21 @@ object Bench {
     // 2× speedup. Failures keep their timing entry (the driver may key on
     // the full name set) but are named in the record and on stderr.
     val failedQ = scala.collection.mutable.ArrayBuffer.empty[String]
+    // Generated classes compiled per entry (Janino compiles, i.e. codegen
+    // cache misses): the exact counter delta around each entry, so a return
+    // of the recompile thrash GraftSession.CodegenReuse removed shows up as
+    // a diff between two records.
+    def compileCount(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount
+    val compiles = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
       // label the query's jobs (guide §1.5): event logs / the UI attribute
       // every job, stage and task to its query by name — free at run time
       spark.sparkContext.setJobDescription(name)
+      val compiles0 = compileCount()
       val t0 = System.nanoTime()
       // full materialization via the noop sink: count() lets Spark prune
       // unused projections, under-timing projection-heavy queries
@@ -187,6 +196,7 @@ object Bench {
         System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
       val dt = (System.nanoTime() - t0) / 1e9
+      compiles += name -> (compileCount() - compiles0)
       // drop this query's persisted intermediates: several operators
       // persist() (LSH bands, inverted indexes) and the handles go out of
       // scope when the query returns — left cached, 150 queries' blocks
@@ -197,7 +207,7 @@ object Bench {
       name -> dt
     }
     def ms(v: Double): Double = math.rint(v * 1000) / 1000
-    def dict(entries: Seq[(String, Double)]): String =
+    def dict[V](entries: Seq[(String, V)]): String =
       entries.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     // paths are interpolated into JSON — escape them (a dir with a quote
     // or backslash must not produce an unparseable round record)
@@ -335,7 +345,7 @@ object Bench {
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","commit":${jstr(commit)},"code_fp":${jstr(codeFp)},"cpus":$cpusInt,"queries":${dict(results)},""" +
       s""""median_total":$medTotal,"median_over":${history.size},""" +
-      s""""medians":${dict(medians)},"stats":$statsJson,"failed":${jarr(failedQ.toSeq)},"sf":${jstr(sfDir)}}"""
+      s""""medians":${dict(medians)},"codegen_compiles":${dict(compiles.toSeq)},"stats":$statsJson,"failed":${jarr(failedQ.toSeq)},"sf":${jstr(sfDir)}}"""
     // The COMPLETE per-query record goes to a file: the driver captures only
     // the last ~2000 chars of the sbt log, and 150 query names alone exceed
     // that, so a full dict on stdout can never survive the tail window.
@@ -371,7 +381,7 @@ object Bench {
     val perQuery =
       s"""{"metric":"per_query_median","value":$medTotal,"unit":"sec","commit":${jstr(commit)},""" +
       s""""code_fp":${jstr(codeFp)},"cpus":$cpusInt,"median_over":${history.size},"queries":${dict(medians)},""" +
-      s""""last_run":${dict(results)},"failed":${jarr(failedQ.toSeq)},"sf":${jstr(sfDir)}}"""
+      s""""last_run":${dict(results)},"codegen_compiles":${dict(compiles.toSeq)},"failed":${jarr(failedQ.toSeq)},"sf":${jstr(sfDir)}}"""
     if (driverRun)
       write(java.nio.file.Paths.get(f"bench/r$round%02d_per_query.json"), perQuery + "\n")
 
@@ -387,7 +397,8 @@ object Bench {
     // SCALING.md-vs-BENCH.json drift check on (fingerprint, value) pairs
     val line = s"""{"metric":"total","value":${ms(medTotal)},"unit":"sec"""" +
       s""","code_fp":${jstr(codeFp)},"cpus":$cpusInt,"queries":${dict(headline)},"median_over":${history.size}""" +
-      s""","n_queries":${results.size},"n_failed":${failedQ.size},"full_record":${jstr(outPath)},"sf":${jstr(sfDir)}}"""
+      s""","n_queries":${results.size},"n_failed":${failedQ.size},"codegen_compiles":${compiles.map(_._2).sum}""" +
+      s""","full_record":${jstr(outPath)},"sf":${jstr(sfDir)}}"""
     // Belt and braces for the driver's tail parse: the same line also goes
     // to a FIXED file, immune to anything the log stream interleaves.
     if (driverRun)

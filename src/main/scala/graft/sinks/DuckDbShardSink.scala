@@ -80,25 +80,30 @@ object DuckDbShardSink {
       .sortWithinPartitions(sortCols: _*)
 
     arranged.foreachPartition { rows: Iterator[Row] =>
-      Class.forName("org.duckdb.DuckDBDriver")
-      // Jackson for list→JSON text: full escaping (control chars included),
-      // matching the reference's serde_json Value::to_string (src/main.rs:835-837)
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      var conn: java.sql.Connection = null
-      var stmt: java.sql.PreparedStatement = null
-      var currentShard = Int.MinValue
-      var localPath: java.io.File = null
-      var rowIdx = 0
-      def close(): Unit = if (conn != null) {
-        stmt.close(); conn.commit(); conn.close()
-        val dest = new HPath(s"$outDir/$currentShard.duckdb")
-        val fs = dest.getFileSystem(new Configuration())
-        fs.setWriteChecksum(false)
-        if (fs.exists(dest)) fs.delete(dest, false)
-        fs.copyFromLocalFile(true, true, new HPath(localPath.getAbsolutePath), dest)
-        conn = null; stmt = null
-      }
-      def open(shard: Int): Unit = {
+      shardWriter(outDir, ddl, ins, metaKinds).writeAll(rows, r => r.getInt(r.length - 1))
+    }
+  }
+
+  /** The task side of [[writeShards]]: each shard is built in a local temp
+    * file and copied to `outDir` only once its last row is committed. */
+  private[graft] def shardWriter(
+      outDir: String,
+      ddl: Seq[String],
+      ins: String,
+      metaKinds: Seq[MetadataType]): ShardWriter[Row] = {
+    Class.forName("org.duckdb.DuckDBDriver")
+    // Jackson for list→JSON text: full escaping (control chars included),
+    // matching the reference's serde_json Value::to_string (src/main.rs:835-837)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val conf = new Configuration()
+    new ShardWriter[Row] {
+      private var conn: java.sql.Connection = null
+      private var stmt: java.sql.PreparedStatement = null
+      private var currentShard = Int.MinValue
+      private var localPath: java.io.File = null
+      private var rowIdx = 0
+      protected def open(shard: Int): Unit = {
+        currentShard = shard
         localPath = java.io.File.createTempFile(s"graft-shard-$shard-", ".duckdb")
         localPath.delete()
         conn = java.sql.DriverManager.getConnection(s"jdbc:duckdb:${localPath.getAbsolutePath}")
@@ -108,36 +113,50 @@ object DuckDbShardSink {
         stmt = conn.prepareStatement(ins)
         rowIdx = 0
       }
-      try {
-        while (rows.hasNext) {
-          val row = rows.next()
-          val shard = row.getInt(row.length - 1)
-          if (shard != currentShard) { close(); open(shard); currentShard = shard }
-          try {
-            val audio = row.getStruct(0)
-            stmt.setInt(1, rowIdx) // in-shard 0-based index
-            stmt.setDouble(2, row.getDouble(1))
-            stmt.setString(3, audio.getAs[String]("path"))
-            stmt.setInt(4, audio.getAs[Int]("sampling_rate"))
-            stmt.setBytes(5, audio.getAs[Array[Byte]]("bytes"))
-            metaKinds.zipWithIndex.foreach { case (t, i) =>
-              val v = row.get(2 + i)
-              val pos = 6 + i
-              (t, v) match {
-                case (_, null)            => stmt.setObject(pos, null)
-                case (MBool, b: Boolean)  => stmt.setBoolean(pos, b)
-                case (MFloat64, d: Double) => stmt.setDouble(pos, d)
-                case (MList(_), seq: scala.collection.Seq[_]) =>
-                  import scala.jdk.CollectionConverters._
-                  stmt.setString(pos, mapper.writeValueAsString(seq.asJava))
-                case (_, x)               => stmt.setString(pos, x.toString)
-              }
+      protected def write(row: Row): Unit = {
+        try {
+          val audio = row.getStruct(0)
+          stmt.setInt(1, rowIdx) // in-shard 0-based index
+          stmt.setDouble(2, row.getDouble(1))
+          stmt.setString(3, audio.getAs[String]("path"))
+          stmt.setInt(4, audio.getAs[Int]("sampling_rate"))
+          stmt.setBytes(5, audio.getAs[Array[Byte]]("bytes"))
+          metaKinds.zipWithIndex.foreach { case (t, i) =>
+            val v = row.get(2 + i)
+            val pos = 6 + i
+            (t, v) match {
+              case (_, null)            => stmt.setObject(pos, null)
+              case (MBool, b: Boolean)  => stmt.setBoolean(pos, b)
+              case (MFloat64, d: Double) => stmt.setDouble(pos, d)
+              case (MList(_), seq: scala.collection.Seq[_]) =>
+                import scala.jdk.CollectionConverters._
+                stmt.setString(pos, mapper.writeValueAsString(seq.asJava))
+              case (_, x)               => stmt.setString(pos, x.toString)
             }
-            stmt.executeUpdate()
-          } catch { case _: java.sql.SQLException => /* src/main.rs:841 */ }
-          rowIdx += 1
+          }
+          stmt.executeUpdate()
+        } catch { case _: java.sql.SQLException => /* src/main.rs:841 */ }
+        rowIdx += 1
+      }
+      private def dest = new HPath(s"$outDir/$currentShard.duckdb")
+      protected def publish(): Unit = {
+        stmt.close(); conn.commit(); conn.close()
+        conn = null; stmt = null
+        val fs = dest.getFileSystem(conf)
+        fs.setWriteChecksum(false)
+        if (fs.exists(dest)) fs.delete(dest, false)
+        fs.copyFromLocalFile(true, true, new HPath(localPath.getAbsolutePath), dest)
+        localPath = null
+      }
+      /** Closes without committing (a rollback), deletes the local temp, and
+        * deletes `{shard}.duckdb` in `outDir` — a part-copied one, or one
+        * an earlier run left that this task was to replace (X4). */
+      protected def discard(): Unit = if (localPath != null)
+        try if (conn != null) conn.close()
+        finally {
+          localPath.delete()
+          dest.getFileSystem(conf).delete(dest, false)
         }
-      } finally close()
     }
   }
 }

@@ -104,15 +104,30 @@ object ParquetShardSink {
     val arranged = df.select(dataCols :+ col("shard_id"): _*)
       .repartition(nShards, col("shard_id"))
       .sortWithinPartitions(sortCols: _*)
-    val shardOrdinal = dataSchema.length // shard_id is the trailing field
     val schemaJson = dataSchema.json
     val codecName = codec(compression)
     val sessionTz = spark.sessionState.conf.sessionLocalTimeZone
+    arranged.queryExecution.toRdd.foreachPartition { rows: Iterator[InternalRow] =>
+      val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson).asInstanceOf[StructType]
+      val shardOrdinal = schema.length // shard_id is the trailing field
+      shardWriter(outDir, schema, codecName, footerKv, sessionTz)
+        .writeAll(rows, _.getInt(shardOrdinal))
+    }
+  }
 
+  /** The task side of [[writeShards]]: rows carry the `schema` fields and
+    * then the int shard id. */
+  private[graft] def shardWriter(
+      outDir: String,
+      schema: StructType,
+      codecName: CompressionCodecName,
+      footerKv: Map[String, String],
+      sessionTz: String): ShardWriter[InternalRow] = {
     // Executor-side Configuration is rebuilt from these entries (Configuration
     // itself is not serializable); they are exactly what
     // ParquetWriteSupport.init requires.
-    val confEntries = Map(
+    val conf = new Configuration()
+    Map(
       "spark.sql.parquet.writeLegacyFormat" -> "false",
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
       "spark.sql.parquet.datetimeRebaseModeInWrite" -> "CORRECTED",
@@ -120,17 +135,19 @@ object ParquetShardSink {
       "spark.sql.session.timeZone" -> sessionTz,
       "spark.sql.parquet.fieldId.write.enabled" -> "true",
       "spark.sql.parquet.variant.annotateLogicalType.enabled" -> "false")
-
-    arranged.queryExecution.toRdd.foreachPartition { rows: Iterator[InternalRow] =>
-      val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      val conf = new Configuration()
-      confEntries.foreach { case (k, v) => conf.set(k, v) }
-      ParquetWriteSupport.setSchema(schema, conf)
-      var writer: ParquetWriter[InternalRow] = null
-      var currentShard = Int.MinValue
-      def close(): Unit = if (writer != null) { writer.close(); writer = null }
-      def open(shard: Int): Unit = {
-        val path = new HPath(s"$outDir/$shard.parquet")
+      .foreach { case (k, v) => conf.set(k, v) }
+    ParquetWriteSupport.setSchema(schema, conf)
+    // Project away the trailing shard_id so the written row matches the
+    // file schema exactly.
+    val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
+      schema.zipWithIndex.map { case (f, i) =>
+        org.apache.spark.sql.catalyst.expressions.BoundReference(i, f.dataType, f.nullable)
+      }.toArray[org.apache.spark.sql.catalyst.expressions.Expression])
+    new ShardWriter[InternalRow] {
+      private var path: HPath = null
+      private var writer: ParquetWriter[InternalRow] = null
+      protected def open(shard: Int): Unit = {
+        path = new HPath(s"$outDir/$shard.parquet")
         val fs = path.getFileSystem(conf)
         fs.setWriteChecksum(false) // no .crc siblings next to exact-named shards
         if (fs.exists(path)) fs.delete(path, false) // X4 overwrite
@@ -142,20 +159,11 @@ object ParquetShardSink {
           .withRowGroupRowCountLimit(RowGroupRows)
           .build()
       }
-      // Project away the trailing shard_id so the written row matches the
-      // file schema exactly.
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
-        schema.zipWithIndex.map { case (f, i) =>
-          org.apache.spark.sql.catalyst.expressions.BoundReference(i, f.dataType, f.nullable)
-        }.toArray[org.apache.spark.sql.catalyst.expressions.Expression])
-      try {
-        while (rows.hasNext) {
-          val row = rows.next()
-          val shard = row.getInt(shardOrdinal)
-          if (shard != currentShard) { close(); open(shard); currentShard = shard }
-          writer.write(proj(row))
-        }
-      } finally close()
+      protected def write(row: InternalRow): Unit = writer.write(proj(row))
+      protected def publish(): Unit = { writer.close(); writer = null; path = null }
+      protected def discard(): Unit = if (path != null)
+        try if (writer != null) writer.close()
+        finally path.getFileSystem(conf).delete(path, false)
     }
   }
 }

@@ -37,57 +37,65 @@ object TarShardSink {
       .sortWithinPartitions(sortCols: _*)
     val keys = metaKeys.toIndexedSeq
     arranged.foreachPartition { rows: Iterator[Row] =>
-      val conf = new Configuration()
-      var out: java.io.OutputStream = null
-      var currentShard = Int.MinValue
-      var ordinal = 0
-      def close(): Unit = if (out != null) { Tar.finishTo(out); out.close(); out = null }
-      def open(shard: Int): Unit = {
-        val path = new HPath(s"$outDir/$shard.tar")
+      shardWriter(outDir, keys).writeAll(rows, _.getAs[Int]("shard_id"))
+    }
+  }
+
+  /** The task side of [[writeShards]]. */
+  private[graft] def shardWriter(outDir: String, keys: Seq[String]): ShardWriter[Row] = {
+    val conf = new Configuration()
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    new ShardWriter[Row] {
+      private var path: HPath = null
+      private var out: java.io.OutputStream = null
+      private var ordinal = 0
+      protected def open(shard: Int): Unit = {
+        path = new HPath(s"$outDir/$shard.tar")
         val fs = path.getFileSystem(conf)
         fs.setWriteChecksum(false)
         if (fs.exists(path)) fs.delete(path, false) // X4 overwrite
         out = fs.create(path, true)
         ordinal = 0
       }
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      try {
-        rows.foreach { row =>
-          val shard = row.getAs[Int]("shard_id")
-          if (shard != currentShard) { close(); open(shard); currentShard = shard }
-          val audio = row.getAs[Row]("audio")
-          val node = mapper.createObjectNode()
-          node.put("path", audio.getAs[String]("path"))
-          node.put("duration", row.getAs[Double]("duration"))
-          node.put("sampling_rate", audio.getAs[Int]("sampling_rate"))
-          keys.foreach { k =>
-            row.getAs[Any](k) match {
-              case null => node.putNull(k)
-              case s: String => node.put(k, s)
-              case b: Boolean => node.put(k, b)
-              case d: Double => node.put(k, d)
-              case l: Long => node.put(k, l)
-              case i: Int => node.put(k, i)
-              case seq: scala.collection.Seq[_] =>
-                val arr = node.putArray(k)
-                seq.foreach {
-                  case s: String => arr.add(s)
-                  case b: Boolean => arr.add(b)
-                  case d: Double => arr.add(d)
-                  case l: Long => arr.add(l)
-                  case i: Int => arr.add(i)
-                  case other => arr.add(String.valueOf(other))
-                }
-              case other => node.put(k, other.toString)
-            }
+      protected def write(row: Row): Unit = {
+        val audio = row.getAs[Row]("audio")
+        val node = mapper.createObjectNode()
+        node.put("path", audio.getAs[String]("path"))
+        node.put("duration", row.getAs[Double]("duration"))
+        node.put("sampling_rate", audio.getAs[Int]("sampling_rate"))
+        keys.foreach { k =>
+          row.getAs[Any](k) match {
+            case null => node.putNull(k)
+            case s: String => node.put(k, s)
+            case b: Boolean => node.put(k, b)
+            case d: Double => node.put(k, d)
+            case l: Long => node.put(k, l)
+            case i: Int => node.put(k, i)
+            case seq: scala.collection.Seq[_] =>
+              val arr = node.putArray(k)
+              seq.foreach {
+                case s: String => arr.add(s)
+                case b: Boolean => arr.add(b)
+                case d: Double => arr.add(d)
+                case l: Long => arr.add(l)
+                case i: Int => arr.add(i)
+                case other => arr.add(String.valueOf(other))
+              }
+            case other => node.put(k, other.toString)
           }
-          val key = f"$ordinal%06d"
-          Tar.writeEntryTo(out, Tar.Entry(s"$key.wav", audio.getAs[Array[Byte]]("bytes")))
-          Tar.writeEntryTo(out,
-            Tar.Entry(s"$key.json", mapper.writeValueAsBytes(node)))
-          ordinal += 1
         }
-      } finally close()
+        val key = f"$ordinal%06d"
+        Tar.writeEntryTo(out, Tar.Entry(s"$key.wav", audio.getAs[Array[Byte]]("bytes")))
+        Tar.writeEntryTo(out,
+          Tar.Entry(s"$key.json", mapper.writeValueAsBytes(node)))
+        ordinal += 1
+      }
+      protected def publish(): Unit = {
+        Tar.finishTo(out); out.close(); out = null; path = null
+      }
+      protected def discard(): Unit = if (path != null)
+        try if (out != null) out.close()
+        finally path.getFileSystem(conf).delete(path, false)
     }
   }
 }

@@ -35,5 +35,6 @@ object SparkSpec {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // process-private managed tables (see graft.core.EphemeralWarehouse)
     .config("spark.sql.warehouse.dir", graft.core.EphemeralWarehouse.dir)
+    .config(graft.core.GraftSession.CodegenReuse)
     .getOrCreate()
 }
